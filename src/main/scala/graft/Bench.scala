@@ -57,8 +57,9 @@ import org.apache.spark.sql.SparkSession
   * value/unit/queries/sf plus abbreviated headline fields) sized to survive
   * the driver's 2000-char stdout-tail capture intact (build.sbt turns the
   * sbt "[success]" trailer off for the same reason). The FULL document —
-  * per-run spreads, error texts, retry provenance — is printed first and
-  * written to /tmp/graft_bench.json.
+  * per-run spreads, error texts, retry provenance, each SparkEntry memo
+  * build's wall ("memo_builds") — is printed first and written to
+  * /tmp/graft_bench.json.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -196,10 +197,11 @@ object Bench {
     var heavyJson = "{}"
     var heavyCompact = "{}"
     // cleanup in finally: a failure mid-measurement must not leave the
-    // boilerplate shingle sets / LSH candidates cached through the scaling
+    // boilerplate shingle sets / LSH frames cached through the scaling
     // section that follows in this session
     var bsets: Option[org.apache.spark.sql.DataFrame] = None
-    var lshCand: Option[org.apache.spark.sql.DataFrame] = None
+    // every frame minhashLsh persists (candidates, then the verify corpus)
+    val lshFrames = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val boiler = graft.operators.Dedup.cloneBoilerplate(docs, copies = 399, every = 20)
@@ -239,12 +241,12 @@ object Bench {
           loads += loadavg()
           val (ne, te) = t1(graft.operators.Dedup.jaccardPairs(bs, 0.6).count())
           nEx = ne; exT += te
-          var cand: Option[org.apache.spark.sql.DataFrame] = None
           val (nl, tl) = t1(graft.operators.Dedup
-            .minhashLsh(bs, 0.6, 64, 16, onCache = c => { cand = Some(c); lshCand = Some(c) })
+            .minhashLsh(bs, 0.6, 64, 16, onCache = lshFrames += _)
             .count())
           nLsh = nl; lshT += tl
-          cand.foreach(_.unpersist(false)) // each run re-derives its own candidates
+          // each run re-derives its own frames
+          lshFrames.foreach(_.unpersist(false)); lshFrames.clear()
         }
         HeavyRound(exT.toSeq, lshT.toSeq, loads.toSeq, nEx, nLsh)
       }
@@ -277,7 +279,7 @@ object Bench {
       System.err.println(s"[bench] dedup_heavy FAILED: ${e.getMessage}")
       errors("dedup_heavy") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
     } finally {
-      lshCand.foreach(_.unpersist(false))
+      lshFrames.foreach(_.unpersist(false))
       bsets.foreach(_.unpersist(false))
     }
 
@@ -440,8 +442,14 @@ object Bench {
       f""""local_$c":{"median":${median(r.runs)}%.1f,"min":${r.runs.min}%.1f,"max":${r.runs.max}%.1f,"runs":${r.runs.size},"spread":${r.spread}%.2f,"contended":${scalingContended.contains(c)},"load_1m":${loadsJson(r.loads)}$disc}"""
     }.mkString("{", ",", "}")
     val total = kgCold + results.map(_._2).sum
+    // every memo build's wall, listed by memo name; a nested build (e.g.
+    // shingleSets inside minhashPairs) is also inside its outer build's wall
+    val memoBuilds = SparkEntry.memoBuilds
+    val memoJson = memoBuilds.map(_._1).distinct.map { n =>
+      jq(n) + ":" + memoBuilds.collect { case (`n`, t) => f"$t%.3f" }.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"query_load_1m":$qLoadMap,"sf":"$sfDir","n_errors":${errors.size},"errors":$errJson,"n_retries":${retries.size},"retries":$retryJson,"kg_triples":$nTriples,"kg_wall_cold_sec":$kgCold%.3f,"kg_wall_warm_sec":$kgWarm%.3f,"kg_triples_per_sec":${nTriples / kgWarm}%.1f,"kg_triples_per_sec_cold":${nTriples / kgCold}%.1f,"dedup_heavy":$heavyJson,"scaling_turns":${scaleSpec.nConv * scaleSpec.turnsPerConv},"scaling_tps":$scalingJson,"scaling_efficiency_1_4":${eff(1, 4)}%.3f,"scaling_efficiency_8_32":${eff(8, 32)}%.3f}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"query_load_1m":$qLoadMap,"sf":"$sfDir","n_errors":${errors.size},"errors":$errJson,"n_retries":${retries.size},"retries":$retryJson,"kg_triples":$nTriples,"kg_wall_cold_sec":$kgCold%.3f,"kg_wall_warm_sec":$kgWarm%.3f,"kg_triples_per_sec":${nTriples / kgWarm}%.1f,"kg_triples_per_sec_cold":${nTriples / kgCold}%.1f,"dedup_heavy":$heavyJson,"scaling_turns":${scaleSpec.nConv * scaleSpec.turnsPerConv},"scaling_tps":$scalingJson,"scaling_efficiency_1_4":${eff(1, 4)}%.3f,"scaling_efficiency_8_32":${eff(8, 32)}%.3f,"memo_builds":$memoJson}"""
     // full document: printed first (humans, logs) and written to the file
     // (the durable machine-readable copy)
     println(json)

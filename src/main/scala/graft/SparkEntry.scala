@@ -1,14 +1,17 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 
 import graft.core.{Candidates, GraftConfig, Scoring}
 import graft.fixtures.Synth
 import graft.operators.{Dedup, GraphOps, Multimodal, Similarity, TextStats, Timeseries}
 import graft.pipeline.{KgPipeline, Scorer, TranscriptSource, TripleEmitter}
+import graft.pipeline.ConnectedComponents.releaseResult
 
 /** Driver contract (SURVEY.md §7; see Verify/Bench).
   *
@@ -29,6 +32,79 @@ object SparkEntry {
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  // -------------------------------------------------------- memo registry
+
+  private final case class MemoKey(session: SparkSession, name: String, key: String)
+  private final case class MemoCell(value: Promise[Any], release: Any => Unit)
+  // both guarded by memos.synchronized
+  private val memos = scala.collection.mutable.LinkedHashMap[MemoKey, MemoCell]()
+  private val buildWalls = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+
+  /** The per-session memo registry: memo `name`'s value for `key` in `s`,
+    * built on first use only; `release` frees what the build cached. The
+    * build runs OUTSIDE the registry lock because builds nest (minhashPairs
+    * builds shingleSets); concurrent callers wait for the one build. A
+    * build that throws leaves no entry and rethrows to every waiter. Build
+    * walls are logged by name (memoBuilds), nested builds inside outer ones. */
+  private[graft] def memo[V](name: String, s: SparkSession, key: String)(build: => V)(
+      release: V => Unit): V = {
+    val k = MemoKey(s, name, key)
+    val mine = MemoCell(Promise(), release.asInstanceOf[Any => Unit])
+    val cell = memos.synchronized(memos.getOrElseUpdate(k, mine))
+    if (cell eq mine) {
+      val t0 = System.nanoTime()
+      try mine.value.success(build)
+      catch { case e: Throwable =>
+        memos.synchronized(memos.remove(k)); mine.value.failure(e); throw e
+      }
+      memos.synchronized(buildWalls += name -> (System.nanoTime() - t0) / 1e9)
+    }
+    Await.result(cell.value.future, Duration.Inf).asInstanceOf[V]
+  }
+
+  /** Remove and release the built entries of `s` that `which` selects, in
+    * passes until one removes nothing: an entry a query thread adds DURING
+    * the drain is caught by the next pass. Entries still building stay
+    * (callers quiesce the session's query threads first). */
+  private def dropMemos(s: SparkSession)(which: MemoKey => Boolean): Unit = {
+    var dropped = Seq.empty[MemoCell]
+    do {
+      dropped = memos.synchronized {
+        val done = memos.filter { case (k, c) =>
+          (k.session eq s) && which(k) && c.value.isCompleted }
+        memos --= done.keys
+        done.values.toSeq
+      }
+      dropped.foreach(c => c.value.future.value.foreach(_.foreach(c.release)))
+    } while (dropped.nonEmpty)
+  }
+
+  private[graft] def memoEntries(s: SparkSession): Seq[(String, String)] =
+    memos.synchronized(memos.keys.filter(_.session eq s).map(k => (k.name, k.key)).toSeq)
+
+  /** (memo name, build wall seconds) of every build, in completion order. */
+  private[graft] def memoBuilds: Seq[(String, Double)] = memos.synchronized(buildWalls.toSeq)
+
+  /** Evict and release EVERY memo of `spark`. Long-lived drivers that cycle
+    * sessions must call this before stopping one. */
+  private[graft] def clearSession(spark: SparkSession): Unit = dropMemos(spark)(_ => true)
+
+  private def pathTag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** This session's directory for on-disk memos (triples sinks and their
+    * compacted twins, the LSH index), under the first SPARK_LOCAL_DIRS
+    * entry else java.io.tmpdir, so two JVMs on one sf dir never share files.
+    * Deleted by its release, or at JVM exit. */
+  private[graft] def sessionDir(s: SparkSession): String =
+    memo("sessionDir", s, "") {
+      val base = java.nio.file.Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
+        .map(_.split(",")(0)).getOrElse(System.getProperty("java.io.tmpdir")))
+      val d = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Files.createDirectories(base), "graft_memo_").toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+      d.getPath
+    }(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+
   // ------------------------------------------------------------------ KG
 
   /** Synthetic-corpus size scales with the sf dir: sf0.001 -> 100 convs
@@ -41,27 +117,22 @@ object SparkEntry {
     Synth.Spec(nConv = math.max(100, (sf * 100000).toInt))
   }
 
-  private val kgCache = new ConcurrentHashMap[String, KgPipeline.Outputs]()
-  private val writtenTriples = new ConcurrentHashMap[String, String]()
-
   /** Pred-partitioned triples sink on disk, written once per (session, sf);
     * both 1-hop queries read it back so the partition-pruned scan is real. */
-  private def triplesSink(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_triples_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writtenTriples.computeIfAbsent(path + "@" + s.hashCode(), _ => {
+  private def triplesSink(s: SparkSession, dir: String): String =
+    memo("triplesSink", s, pathTag(dir)) {
+      val path = s"${sessionDir(s)}/triples_${pathTag(dir)}"
       TripleEmitter.write(kg(s, dir).triples, path); path
-    })
-  }
+    }(_ => ()) // the files go with sessionDir
 
-  /** Co-mention pairs (entity_a < entity_b, n_turns), memoized + persisted
-    * per (session, dir): the turn-hub self-join feeds four graph queries
+  /** Co-mention pairs (entity_a < entity_b, n_turns), memoized per
+    * (session, dir): the turn-hub self-join feeds four graph queries
     * (comention, triangles, entity_sim, relatedEntities), and operators
     * like triangleCounts reference their edge input several times — an
     * unmemoized frame re-ran the self-join per lineage reference (measured
-    * 12.9 s kg_triangles at sf0.1; ~1 s on the persisted pairs). */
-  private val comentionCache = new ConcurrentHashMap[String, DataFrame]()
-  private def comentionPairs(s: SparkSession, dir: String): DataFrame =
-    comentionCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+    * 12.9 s kg_triangles at sf0.1; ~1 s on the memoized pairs). */
+  private[graft] def comentionPairs(s: SparkSession, dir: String): DataFrame =
+    memo("comentionPairs", s, dir) {
       // eager localCheckpoint, NOT persist+count: under persist the frame
       // keeps its full logical lineage (the whole kg pipeline), and the
       // nine graph queries reading this memo re-ANALYZE that giant subtree
@@ -71,21 +142,19 @@ object SparkEntry {
       // turns every reference into an ExistingRDD scan; rows unchanged.
       GraphOps.coMentions(
         kg(s, dir).triples.select("subj", "pred", "obj")).localCheckpoint(true)
-    })
+    }(releaseResult)
 
   /** Compacted twin of the triples sink, built once per (session, sf):
     * the bin-packed, subj-sorted rewrite TripleEmitter.compact produces.
     * The gate reads THIS store against the same golden-oracle twin as the
     * live sink — content preservation under re-layout is the property. */
-  private val compactedTriples = new ConcurrentHashMap[String, String]()
-  private def compactedSink(s: SparkSession, dir: String): String = {
-    val src = triplesSink(s, dir)
-    compactedTriples.computeIfAbsent(src + "@" + s.hashCode(), _ => {
+  private def compactedSink(s: SparkSession, dir: String): String =
+    memo("compactedSink", s, pathTag(dir)) {
+      val src = triplesSink(s, dir)
       val out = src + "_compacted"
       TripleEmitter.compact(s, src, out)
       out
-    })
-  }
+    }(_ => ()) // the files go with sessionDir
 
   /** Incrementally-compacted twin of the triples sink, built once per
     * (session, sf): the live store is COPIED to a work dir (the in-place
@@ -95,10 +164,9 @@ object SparkEntry {
     * MIXED store: hot partitions re-packed, cold partitions byte-untouched
     * (file identity verified by the operator and required here). The gate
     * reads the mixed store against the same golden twin as the live sink. */
-  private val incCompactedTriples = new ConcurrentHashMap[String, String]()
-  private def incCompactedSink(s: SparkSession, dir: String): String = {
-    val src = triplesSink(s, dir)
-    incCompactedTriples.computeIfAbsent(src + "@" + s.hashCode(), _ => {
+  private def incCompactedSink(s: SparkSession, dir: String): String =
+    memo("incCompactedSink", s, pathTag(dir)) {
+      val src = triplesSink(s, dir)
       val out = src + "_inccompact"
       val conf = s.sparkContext.hadoopConfiguration
       val srcP = new org.apache.hadoop.fs.Path(src)
@@ -117,8 +185,7 @@ object SparkEntry {
       require(stats.untouchedPreserved,
         s"untouched partitions were rewritten: $stats")
       out
-    })
-  }
+    }(_ => ()) // the files go with sessionDir
 
   /** Checkpoint the five output frames of a pipeline run for the memo:
     * eager localCheckpoints, NOT persists. A persisted frame keeps its full
@@ -133,7 +200,7 @@ object SparkEntry {
   private def checkpointOutputs(out: KgPipeline.Outputs): KgPipeline.Outputs = {
     val mentions = out.mentions.localCheckpoint(true)
     val decisions = out.decisions.localCheckpoint(true)
-    KgPipeline.Outputs(
+    val checkpointed = KgPipeline.Outputs(
       mentions, decisions,
       out.components.localCheckpoint(true), out.triples.localCheckpoint(true),
       // decisionStats stays LAZY: derived from the checkpointed decisions its
@@ -142,13 +209,16 @@ object SparkEntry {
       // every timed kg() build (bench kg_cold/kg_warm) for a frame only the
       // kg_decision_stats query reads
       KgPipeline.decisionStats(decisions), out.cached)
+    // the run's own mentions/decisions persists are superseded by the
+    // checkpoints; nothing else would ever free them
+    Seq(out.mentions, out.decisions).foreach(_.unpersist(false))
+    checkpointed
   }
 
   /** Free a memoized run: the pipeline-internal caches via release(), then
     * the checkpointed output frames' own RDD blocks (unpersist is a no-op
     * on a checkpointed frame — releaseResult drops the LogicalRDD blocks). */
   private def releaseOutputs(o: KgPipeline.Outputs): Unit = {
-    import graft.pipeline.ConnectedComponents.releaseResult
     o.release()
     Seq(o.mentions, o.decisions, o.components, o.triples, o.decisionStats)
       .foreach(releaseResult)
@@ -158,12 +228,12 @@ object SparkEntry {
     * kg_* query reads memoized results instead of recomputing — or even
     * re-planning — the DAG. */
   private[graft] def kg(spark: SparkSession, sfDir: String): KgPipeline.Outputs =
-    kgCache.computeIfAbsent(sfDir + "@" + spark.hashCode(), _ => {
+    memo("kg", spark, sfDir) {
       val spec = specFor(sfDir)
       val dict = Synth.dictionary(spec)
       val turns = TranscriptSource.fromSeq(spark, Synth.transcripts(spec, dict))
       checkpointOutputs(KgPipeline.run(spark, turns, dict, GraftConfig.default))
-    })
+    }(releaseOutputs)
 
   /** Drop one sfDir's memoized pipeline run and free EVERY frame it cached —
     * the five outputs plus the pipeline's internal stage caches
@@ -171,47 +241,7 @@ object SparkEntry {
     * uses this to time a warm second run honestly; long-lived sessions use
     * it to keep executor storage flat across runs. */
   private[graft] def clearKg(spark: SparkSession, sfDir: String): Unit =
-    Option(kgCache.remove(sfDir + "@" + spark.hashCode())).foreach(releaseOutputs)
-
-  /** Evict EVERY per-session memo for `spark` — kg runs plus the operator
-    * caches (shingle sets, minhash pairs, prepped embeddings, probes, IVF
-    * index) — unpersisting what they cached. Long-lived drivers that cycle
-    * sessions must call this before stopping one, or the maps accumulate
-    * DataFrame references bound to dead SparkContexts (the caches key on
-    * session hashCode and are never hit again after the session stops).
-    *
-    * Concurrency: each map is drained with repeated filter-remove passes
-    * until a pass removes nothing, so an entry inserted by a still-running
-    * query thread DURING eviction is caught by the next pass instead of
-    * leaking (a single keySet snapshot missed it). The remaining race — an
-    * insert that lands after the final pass — is the caller's contract:
-    * quiesce the session's query threads before clearSession, same as
-    * before SparkSession.stop. */
-  private[graft] def clearSession(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    val sfx = "@" + spark.hashCode()
-    def drain[V](m: ConcurrentHashMap[String, V])(release: V => Unit): Unit = {
-      var removedAny = true
-      while (removedAny) {
-        removedAny = false
-        m.keySet.asScala.filter(_.endsWith(sfx)).toSeq.foreach { k =>
-          Option(m.remove(k)).foreach { v => release(v); removedAny = true }
-        }
-      }
-    }
-    drain(kgCache)(releaseOutputs)
-    drain(writtenTriples)(_ => ())
-    drain(compactedTriples)(_ => ())
-    drain(incCompactedTriples)(_ => ())
-    drain(bucketedTables)(_ => ())
-    Seq(setsCache, embCache, probeCache)
-      .foreach(drain(_)(_.unpersist(false)))
-    // these memos are locally checkpointed (not persisted): freeing them
-    // means unpersisting the checkpoint RDD blocks themselves
-    Seq(lshPairsCache, incPairsCache, comentionCache)
-      .foreach(drain(_)(graft.pipeline.ConnectedComponents.releaseResult))
-    drain(ivfCache)(_._2.unpersist(false))
-  }
+    dropMemos(spark)(k => k.name == "kg" && k.key == sfDir)
 
   /** zh-mixed corpus scale: smaller than the Latin corpus (it gates the CJK
     * mention semantics, not throughput) but still sf-scaled. */
@@ -222,15 +252,14 @@ object SparkEntry {
   }
 
   /** zh/en mixed pipeline run (unsegmented Chinese mentions — the corpus
-    * shape of the reference's own seed data), memoized like `kg` under a
-    * "zh:"-prefixed key so clearSession releases it too. */
+    * shape of the reference's own seed data), memoized like `kg`. */
   private[graft] def kgZh(spark: SparkSession, sfDir: String): KgPipeline.Outputs =
-    kgCache.computeIfAbsent("zh:" + sfDir + "@" + spark.hashCode(), _ => {
+    memo("kgZh", spark, sfDir) {
       val spec = zhSpecFor(sfDir)
       val dict = Synth.zhDictionary(spec)
       val turns = TranscriptSource.fromSeq(spark, Synth.zhTranscripts(spec, dict))
       checkpointOutputs(KgPipeline.run(spark, turns, dict, GraftConfig.default))
-    })
+    }(releaseOutputs)
 
   /** Flagship: end-to-end KG triples on a small fixed corpus. */
   def entry(spark: SparkSession): DataFrame =
@@ -261,19 +290,18 @@ object SparkEntry {
     * them several times (sizes + two join sides + signatures), so the frame
     * is memoized per (session, dir) and persisted — recomputing it 3-4x per
     * query was the dominant cost of round 1's dedup benches. */
-  private[graft] val setsCache = new ConcurrentHashMap[String, DataFrame]()
-  private def shingleSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ =>
-      Dedup.shingleSets(tbl(s, dir, "documents"), n = 3, maxDf = 50L).persist())
+  private[graft] def shingleSets(s: SparkSession, dir: String): DataFrame =
+    memo("shingleSets", s, dir)(
+      Dedup.shingleSets(tbl(s, dir, "documents"), n = 3, maxDf = 50L).persist()
+    )(_.unpersist(false))
 
   /** MinHash-LSH verified pairs, memoized per (session, dir): the result is
-    * materialized eagerly so the operator's internal persisted candidate
-    * frame can be released immediately (otherwise one bucket-scale frame per
-    * call stays cached for the session — the leak the onCache hook exists
-    * to close); repeat queries then read the tiny persisted pair frame. */
-  private val lshPairsCache = new ConcurrentHashMap[String, DataFrame]()
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+    * materialized eagerly so the operator's internal persisted frames can
+    * be released immediately (otherwise bucket-scale frames per call stay
+    * cached for the session — the leak the onCache hook exists to close);
+    * repeat queries then read the tiny checkpointed pair frame. */
+  private[graft] def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    memo("minhashPairs", s, dir) {
       val cached = scala.collection.mutable.Buffer[DataFrame]()
       // 128/32 pinned HERE (not the 64/16 default): this surface is gated by
       // an exact-equality DuckDB twin, and 128 hashes square the per-pair
@@ -287,7 +315,7 @@ object SparkEntry {
         onCache = cached += _).localCheckpoint(true)
       cached.foreach(_.unpersist(false))
       out
-    })
+    }(releaseResult)
 
   /** Incremental-dedup pairs, memoized per (session, dir). Exercises the
     * full production shape end to end: the kept corpus (a deterministic
@@ -297,15 +325,13 @@ object SparkEntry {
     * (the other 20%) computes only its own signatures and bucket-joins the
     * index. 128/32 pinned for the same gate-immunity math as
     * `minhashPairs`. Same eager-materialize + candidate-release treatment. */
-  private val incPairsCache = new ConcurrentHashMap[String, DataFrame]()
-  private def incrementalPairs(s: SparkSession, dir: String): DataFrame =
-    incPairsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+  private[graft] def incrementalPairs(s: SparkSession, dir: String): DataFrame =
+    memo("incrementalPairs", s, dir) {
       val sets = shingleSets(s, dir)
       val isOld = graft.operators.Corpus.splitResidue(col("doc_id")) < 80
       val oldSets = sets.filter(isOld)
       val newSets = sets.filter(!isOld)
-      val idxPath =
-        s"/tmp/graft_lsh_index_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val idxPath = s"${sessionDir(s)}/lsh_index_${pathTag(dir)}"
       Dedup.bandedSignatures(oldSets, 128, 32)
         .write.mode("overwrite").parquet(idxPath)
       val cached = scala.collection.mutable.Buffer[DataFrame]()
@@ -315,30 +341,28 @@ object SparkEntry {
           onCache = cached += _).localCheckpoint(true)
       cached.foreach(_.unpersist(false))
       out
-    })
+    }(releaseResult)
 
   /** Prepped embeddings (double cast + l2 norm) are memoized per
     * (session, dir) and persisted, same treatment as shingleSets: four
     * ann/dedup queries otherwise rescan and re-norm the embeddings table
     * (round-2's dedup_embed_cosine regression was exactly this recompute). */
-  private val embCache = new ConcurrentHashMap[String, DataFrame]()
-  private def prepEmb(s: SparkSession, dir: String): DataFrame =
-    embCache.computeIfAbsent(dir + "@" + s.hashCode(), _ =>
-      Similarity.prep(tbl(s, dir, "embeddings")).persist())
+  private[graft] def prepEmb(s: SparkSession, dir: String): DataFrame =
+    memo("prepEmb", s, dir)(
+      Similarity.prep(tbl(s, dir, "embeddings")).persist()
+    )(_.unpersist(false))
 
   /** IVF index (Lloyd model + cell-assigned corpus) memoized per
     * (session, dir): the model build walks the corpus iters+1 times, and
     * three driver queries (ivf_topk, ivf_recall twice) would otherwise each
     * rebuild it from scratch. The assigned frame is persisted — it IS the
     * index. */
-  private val ivfCache =
-    new ConcurrentHashMap[String, (Array[(Int, Array[Double])], DataFrame)]()
-  private def ivfIndex(s: SparkSession, dir: String): (Array[(Int, Array[Double])], DataFrame) =
-    ivfCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+  private[graft] def ivfIndex(s: SparkSession, dir: String): (Array[(Int, Array[Double])], DataFrame) =
+    memo("ivfIndex", s, dir) {
       val corpus = prepEmb(s, dir)
       val model = Similarity.kmeans(corpus, 8, 3)
       (model, Similarity.ivfAssign(corpus, model).persist())
-    })
+    }(_._2.unpersist(false))
 
   /** Engine-derived auxiliary dumps for twins that re-derive a gated result
     * from a model artifact (Verify writes them to the `{AUX}` dir): the IVF
@@ -361,10 +385,9 @@ object SparkEntry {
     * bucket count so the recurring 1-hop join is co-located — zero
     * exchanges at query time (plan-gated in PlanSpec). Returns the table
     * name suffix. */
-  private val bucketedTables = new ConcurrentHashMap[String, String]()
   private def bucketedOnehopTables(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    bucketedTables.computeIfAbsent(tag + "@" + s.hashCode(), _ => {
+    val tag = pathTag(dir)
+    memo("bucketedOnehopTables", s, tag) {
       graft.pipeline.BucketedStore.writeBucketed(
         tbl(s, dir, "events").select("event_id", "user_id", "event_type", "value"),
         s"graft_ev_$tag", s"/tmp/graft_bucketed_$tag/events", "user_id", 8)
@@ -372,7 +395,7 @@ object SparkEntry {
         tbl(s, dir, "customer").select("c_custkey", "c_name"),
         s"graft_cust_$tag", s"/tmp/graft_bucketed_$tag/customer", "c_custkey", 8)
       tag
-    })
+    }(_ => ())
   }
 
   /** zh/mixed documents-table size, sf-scaled like the other fixtures. */
@@ -401,16 +424,16 @@ object SparkEntry {
   /** Perturbed probe vectors planted from the corpus (vec_id%10==0):
     * probe = [v1+0.05, v2..v64], probe_id = vec_id+100000. Memoized +
     * persisted per (session, dir) like prepEmb. */
-  private val probeCache = new ConcurrentHashMap[String, DataFrame]()
-  private def plantedProbes(s: SparkSession, dir: String): DataFrame =
-    probeCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+  private[graft] def plantedProbes(s: SparkSession, dir: String): DataFrame =
+    memo("plantedProbes", s, dir) {
       val e = tbl(s, dir, "embeddings").filter(col("vec_id") % 10 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
           Similarity.dvec(col("embedding")).as("v0"))
         .select(col("vec_id"),
           concat(array(element_at(col("v0"), 1) + lit(0.05)), slice(col("v0"), 2, 63)).as("v"))
       e.withColumn("nrm", Similarity.l2norm(col("v"))).persist()
-    })
+    }(_.unpersist(false))
+
 
   /** X13 similarity-details + X14 reasoning projection over a decisions
     * frame (reference disambiguation.py:439-463 and :388-407) — shared

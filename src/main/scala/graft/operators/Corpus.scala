@@ -114,6 +114,7 @@ object Corpus {
     * artifact a tokenizer trainer actually emits. Stops early if no pair
     * remains. */
   def bpeMerges(docs: DataFrame, rounds: Int, checkpointEvery: Int = 3): DataFrame = {
+    require(checkpointEvery > 0, s"checkpointEvery must be > 0, got $checkpointEvery")
     import graft.pipeline.ConnectedComponents.releaseResult
     val spark = docs.sparkSession
     import spark.implicits._

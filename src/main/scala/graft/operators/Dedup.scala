@@ -350,10 +350,11 @@ object Dedup {
     * exhaustive join wherever band recall is 1 (see class doc). The
     * candidate frame is persisted — the verify step reads it three times
     * (doc-id prune twice, intersection join once), and recomputing it
-    * re-runs the whole signature/banding chain each time. The persisted
-    * frame is handed to `onCache` so owners can unpersist it once the
-    * result is materialized (Bench/DedupBench do; one bucket-scale frame
-    * per call otherwise stays cached for the session). Skipped degenerate
+    * re-runs the whole signature/banding chain each time. `onCache` fires
+    * once per persisted frame — two per call: the candidates, then the
+    * pruned verify corpus — so callers must collect EVERY frame and
+    * unpersist them all once the result is materialized (otherwise both
+    * stay cached for the session). Skipped degenerate
     * buckets are counted in the named accumulator
     * "graft.minhash.skipped_buckets" (no silent caps). */
   def minhashLsh(sets: DataFrame, tau: Double, numHashes: Int = 64, bands: Int = 16,
@@ -370,9 +371,7 @@ object Dedup {
     // corpus-scale passes for a verify step whose work should scale with
     // |candidates| (the incrementalLsh discipline, now shared). Doc-level
     // pruning keeps every shingle of a kept doc, so sizes and intersections
-    // are unchanged. onCache fires for BOTH persisted frames, verify corpus
-    // LAST (single-slot handlers keep and release the larger frame; the
-    // pair-scale candidates leak at worst).
+    // are unchanged.
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val verifySets = sets.join(broadcast(candDocs), "doc_id").persist()
@@ -455,9 +454,10 @@ object Dedup {
     * it from several broadcast subtrees, and broadcast exchanges execute
     * as independent jobs that each re-ran the whole candidate chain when
     * it was only lazily persisted — measured 10.7 s fused vs 6.5 s staged
-    * on the 5.1M-row boilerplate corpus. `onCache` fires for BOTH frames
-    * this operator persists (candidates first, then the pruned verify
-    * corpus); callers release them after materializing the result. */
+    * on the 5.1M-row boilerplate corpus. `onCache` fires once per
+    * persisted frame — three per call: the batch signatures, the
+    * candidates, then the pruned verify corpus — so callers must collect
+    * EVERY frame and release them all after materializing the result. */
   def incrementalLsh(oldSets: DataFrame, newSets: DataFrame, tau: Double,
                      numHashes: Int = 64, bands: Int = 16,
                      maxBucket: Int = 4096,

@@ -169,6 +169,12 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.toSeq == out2.toSeq)
   }
 
+  test("bpeMerges: a non-positive checkpointEvery is rejected at entry") {
+    import spark.implicits._
+    val docs = Seq((1L, "aaab aaab"), (2L, "ab")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException](Corpus.bpeMerges(docs, 6, checkpointEvery = 0))
+  }
+
   test("semanticDedup: in-cell transitive clusters keep the min id; cross-cell pairs missed by design") {
     import spark.implicits._
     def row(id: Long, v: Seq[Double], cell: Int) = {
